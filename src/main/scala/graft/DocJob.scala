@@ -20,11 +20,13 @@ import graft.streaming.DedupStream
   * source, n_chars)` (only the columns an op reads are required).
   *
   * `dedup` is INCREMENTAL BY CONSTRUCTION: it appends the given docs to the
-  * versioned state under `<stateDir>` (labels_v<N>/index_v<N>, the same
-  * layout [[DedupStream]] maintains under Structured Streaming) — the first
-  * run bootstraps, every later run fingerprints only its own batch and
-  * probes the stored rep-level band index. Batch backfill and streaming
-  * ingestion therefore share one state and one code path.
+  * state under `<stateDir>` as batch N = the committed snapshot id + 1
+  * (labels_v<N>/index_v<N> deltas committed as one snapshot, the same
+  * layout [[DedupStream]] maintains under Structured Streaming). Every run,
+  * the first included, fingerprints only its own batch and probes the
+  * stored rep-level band index. A run that crashed before its commit left
+  * nothing visible, and re-running it retries the same N. Batch backfill
+  * and streaming ingestion therefore share one state and one code path.
   */
 object DocJob {
   private def usage: String =

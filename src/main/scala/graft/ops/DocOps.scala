@@ -1973,8 +1973,10 @@ object DocOps {
   /** Label DELTA of an incremental append (round 8) — the I/O-layer
     * companion of [[keepersFromEdgesIncremental]]: instead of the full
     * keeper table for ALL docs, emit rows ONLY for
-    *  - the appended docs (label = their component min, self if isolated),
-    *  - previously-labeled docs whose component MERGED (old root relabeled).
+    *  - the appended docs new to the state (label = their component min,
+    *    self if isolated),
+    *  - previously-labeled docs whose component MERGED (old root relabeled),
+    *    including re-ingested ids that `labels0` already maps.
     *
     * Resolving a chain of these deltas newest-row-wins (per doc_id, the
     * highest version's row — [[graft.streaming.DedupStream.readLabels]])
@@ -1997,21 +1999,24 @@ object DocOps {
     val adj = ce.union(
       ce.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     val (relabel, _) = componentLabels(adj, maxIters)
-    // appended docs: edge-touched ones are contracted-graph nodes under
-    // their own id (they have no labels0 entry), isolated ones label self
-    val newLab = newDocIds.select(col("doc_id"))
+    // old roots relabeled to a smaller merged-component minimum — bounded
+    // by the affected components, so broadcast
+    val moved = relabel.where(col("label") =!= col("doc_id"))
+      .select(col("doc_id").as("l0"), col("label").as("moved"))
+    // one doc_id-keyed pass over appended ids ⟗ labels0 (l0: the old root):
+    //  - ids new to the state (no l0) take their contracted-graph label —
+    //    edge-touched ones are nodes under their own id — or label self;
+    //  - labelled docs, re-ingested ids included (contracted to their old
+    //    root like any old doc), get a row only when that root moved;
+    //    otherwise their committed row stands
+    newDocIds.select(col("doc_id"))
       .join(relabel, Seq("doc_id"), "left")
+      .join(labels0.select(col("doc_id"), col("keeper_doc_id").as("l0")),
+        Seq("doc_id"), "full")
+      .join(broadcast(moved), Seq("l0"), "left")
+      .where(col("l0").isNull || col("moved").isNotNull)
       .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("keeper_doc_id"))
-    // old docs change label iff their old root was relabeled to a smaller
-    // merged-component minimum
-    val changedRoots = relabel.where(col("label") =!= col("doc_id"))
-      .select(col("doc_id").as("keeper_doc_id"), col("label"))
-    val oldLab = labels0.select(col("doc_id"), col("keeper_doc_id"))
-      .join(changedRoots, Seq("keeper_doc_id"))
-      .select(col("doc_id"), col("label").as("keeper_doc_id"))
-    // appended ids are new to the state, so the union is disjoint
-    newLab.union(oldLab)
+        coalesce(col("moved"), col("label"), col("doc_id")).as("keeper_doc_id"))
   }
 
   /** Connected-component labels over an undirected adjacency table (both

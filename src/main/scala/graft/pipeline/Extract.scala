@@ -273,7 +273,7 @@ object Extract {
                             resultsPath: org.apache.hadoop.fs.Path,
                             partitioned: Boolean): Unit = {
     val live = SnapshotStore.bootstrap(fs, resultsPath,
-      listDataFiles(fs, resultsPath).toSeq.sorted)
+      SnapshotStore.listDataFiles(fs, resultsPath).toSeq.sorted)
     // physical listing taken BEFORE this writer's staged files move in:
     // pre-rewrite live files + orphans stranded by earlier crashes. The
     // sweep below is restricted to (preList ++ moved) so a concurrent
@@ -283,7 +283,7 @@ object Extract {
     // single-writer(-per-table) scope (SnapshotStore.scala:99-110) no
     // such writer exists. (Round 7: the previous post-commit full listing
     // could sweep any append that moved in anywhere in the window.)
-    val preList = listDataFiles(fs, resultsPath)
+    val preList = SnapshotStore.listDataFiles(fs, resultsPath)
     val moved = moveStaged(fs, tmpPath, resultsPath, partitioned)
     // whole-table rewrite = replace the pre-rewrite live set with the
     // staged one; through the rebase loop a concurrent APPEND landing in
@@ -314,22 +314,6 @@ object Extract {
     fs.exists(path) && fs.listStatus(path)
       .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
 
-  /** Recursive part-file listing of a results dir (works for both the flat
-    * and the bucket-partitioned layout).
-    */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            path: org.apache.hadoop.fs.Path): Set[String] = {
-    if (!fs.exists(path)) return Set.empty
-    val out = Set.newBuilder[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.startsWith("part-"))
-        out += s.getPath.toString
-    }
-    out.result()
-  }
-
   def runCheckpointed(spark: SparkSession, transcriptsPath: String,
                       outDir: String, bucketPartitioned: Boolean = false): Map[String, Any] = {
     val turns = readTranscripts(spark, transcriptsPath)
@@ -338,7 +322,7 @@ object Extract {
     // and a resumed run would silently re-append already-processed keys.
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = listDataFiles(fs, resultsPath)
+    def dataFiles(): Set[String] = SnapshotStore.listDataFiles(fs, resultsPath)
     val existed = fs.exists(resultsPath)
     // the bucketPartitioned flag governs INITIAL creation only: a resume
     // always follows the layout it finds on disk, so a caller passing the
@@ -540,7 +524,7 @@ object Extract {
       // resolve through a committed snapshot, so nothing below is visible
       // until the commit
       val live = SnapshotStore.bootstrap(fs, resultsPath,
-        listDataFiles(fs, resultsPath).toSeq.sorted).toSet
+        SnapshotStore.listDataFiles(fs, resultsPath).toSeq.sorted).toSet
 
       // merge-by-key, FILE-granular (see Scaladoc scale note): only the
       // part-files that actually CONTAIN error rows are rewritten —

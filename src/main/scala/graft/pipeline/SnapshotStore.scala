@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Poor-man's snapshot manifests for a results table — the plain-parquet
   * stand-in for Iceberg's atomic snapshot commit (COVERAGE.md divergence #2,
-  * narrowed by this to concurrent-writer arbitration only).
+  * narrowed by this to concurrent-writer arbitration only). The one
+  * state-commit mechanism: extraction results and the
+  * [[graft.streaming.DedupStream]] state deltas both commit through it.
   *
   * Protocol:
   *  - A table MAY carry a manifest dir `results/_manifests` holding
@@ -78,6 +80,22 @@ object SnapshotStore {
     val content = try new String(in.readAllBytes(), UTF_8) finally in.close()
     content.linesIterator.filter(_.nonEmpty)
       .map(rel => qualify(fs, new Path(results, rel).toString)).toSeq
+  }
+
+  /** Recursive part-file listing of a table dir (works for both the flat
+    * and the bucket-partitioned layout) — the physical file set a writer
+    * commits after staging its parts.
+    */
+  def listDataFiles(fs: FileSystem, path: Path): Set[String] = {
+    if (!fs.exists(path)) return Set.empty
+    val out = Set.newBuilder[String]
+    val it = fs.listFiles(path, true)
+    while (it.hasNext) {
+      val s = it.next()
+      if (s.isFile && s.getPath.getName.startsWith("part-"))
+        out += s.getPath.toString
+    }
+    out.result()
   }
 
   /** The table's live data files (qualified absolute paths) per the current

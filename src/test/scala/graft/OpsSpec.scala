@@ -1452,4 +1452,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       copies.map(_._3).sorted.toSeq === (0L until fct)
     })
   }
+
+  test("CacheLedger: a runtime canChangeCachedPlanOutputPartitioning=false stays false") {
+    val k = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val prev = spark.conf.getAll.get(k)
+    // any op that persists through CacheLedger.track
+    def trackedOp(): Unit = {
+      DocOps.simhashEdgesAppend(DocOps.simhashIndex(docs), docs)._1.count()
+      graft.ops.CacheLedger.release()
+    }
+    try {
+      spark.conf.set(k, "false")
+      trackedOp()
+      assert(spark.conf.get(k) === "false")
+      // a session that never set it still gets AQE-sized cached partitions
+      spark.conf.unset(k)
+      trackedOp()
+      assert(spark.conf.get(k) === "true")
+    } finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
 }

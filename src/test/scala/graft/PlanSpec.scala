@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions for the driver queries: the plans we WANT at scale,
-  * enforced — not just eyeballed via graft.Explain.
+  * enforced — not just eyeballed via `BenchExtra explain`.
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 

@@ -233,8 +233,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.streaming.DedupStream
     val s = spark
     import s.implicits._
-    def words(from: Int, to: Int): String =
-      (from to to).map(i => s"tok$i").mkString(" ")
     // three landing files → three micro-batches (maxFilesPerTrigger=1);
     // cross-batch exact dup (10≡1), cross-batch near-dup chain (20/21≡11),
     // isolated docs in every batch
@@ -260,12 +258,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getPath.getName).filter(_.startsWith("labels_v"))
       .map(_.stripPrefix("labels_v").toLong).max
     assert(lastV === batches.length - 1L)
-    def lab(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // round 8: versions are DELTAS — the live table resolves the chain
-    val streamed = lab(DedupStream.readLabels(spark, state))
+    val streamed = labelMap(DedupStream.readLabels(spark, state))
     val all = batches.flatten.toDF("doc_id", "text")
-    val full = lab(DocOps.keepersFromEdges(all, DocOps.simhashEdges(all)))
+    val full = labelMap(DocOps.keepersFromEdges(all, DocOps.simhashEdges(all)))
     assert(streamed === full)
     assert(full(10L) === full(1L))                     // cross-batch exact dup
     assert(full(20L) === full(11L) && full(21L) === full(11L)) // near-dup chain
@@ -282,15 +278,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deltaIds(2) === Set(20L, 21L, 22L))   // root 11 keeps its label — no old relabel rows
     // resolved reads at intermediate versions equal prefix recomputes
     val pref2 = batches.take(2).flatten.toDF("doc_id", "text")
-    assert(lab(DedupStream.readLabels(spark, state, below = 2L)) ===
-      lab(DocOps.keepersFromEdges(pref2, DocOps.simhashEdges(pref2))))
+    assert(labelMap(DedupStream.readLabels(spark, state, below = 2L)) ===
+      labelMap(DocOps.keepersFromEdges(pref2, DocOps.simhashEdges(pref2))))
 
-    // crash-replay: re-deliver the LAST batch (same batchId) — state reads
-    // come from versions < lastV, writes overwrite the lastV delta → the
-    // recomputed tables are byte-identical
+    // replay: re-deliver the LAST batch (same batchId) — its snapshot is
+    // committed, so the replay is a no-op and the state is unchanged
+    val committed = DedupStream.readLabels(spark, state).inputFiles.toSet
     DedupStream.processBatch(spark, state,
       batches.last.toDF("doc_id", "text"), lastV)
-    assert(lab(DedupStream.readLabels(spark, state)) === full)
+    assert(DedupStream.readLabels(spark, state).inputFiles.toSet === committed)
+    assert(labelMap(DedupStream.readLabels(spark, state)) === full)
+    // one manifest retained: the current snapshot lists every delta
+    assert(graft.pipeline.SnapshotStore.snapshots(fs,
+      new org.apache.hadoop.fs.Path(state)).map(_._1) === Seq(lastV))
     // index stays rep-level: one rep per distinct (batch, fingerprint),
     // 4 band rows each — in-batch dup groups (20/21) collapse before the
     // index ever sees them; each index_v delta holds ONLY its batch's reps
@@ -302,5 +302,135 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         repsPerBatch(v.toInt) * 4L))
     assert(DedupStream.readIndex(spark, state).count() === repsPerBatch.sum * 4L)
     assert(repsPerBatch.sum < batches.map(_.length).sum) // the collapse did fire
+  }
+
+  private def words(from: Int, to: Int): String =
+    (from to to).map(i => s"tok$i").mkString(" ")
+
+  /** Writes each batch as a parquet table `<work>/b<i>`; returns the paths. */
+  private def landBatches(work: String, batches: Seq[Seq[(Long, String)]]): Seq[String] = {
+    val s = spark
+    import s.implicits._
+    batches.zipWithIndex.map { case (b, i) =>
+      b.toDF("doc_id", "text").write.parquet(s"$work/b$i")
+      s"$work/b$i"
+    }
+  }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The keeper table a from-scratch SimHash pass gives over every distinct doc. */
+  private def fullKeepers(batches: Seq[Seq[(Long, String)]]): Map[Long, Long] = {
+    val s = spark
+    import s.implicits._
+    val all = batches.flatten.distinct.toDF("doc_id", "text")
+    labelMap(graft.ops.DocOps.keepersFromEdges(all, graft.ops.DocOps.simhashEdges(all)))
+  }
+
+  test("dedup state: a crash before the commit leaves no torn version; the retry completes it") {
+    import graft.streaming.DedupStream
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    // batch 2 holds a near-dup of batch 1 (20 ≡ 11) and a new doc (21);
+    // batch 3 appends a dup of that new doc (30 ≡ 21)
+    val batches = Seq(
+      Seq((1L, words(1, 20)), (2L, words(100, 119))),
+      Seq((10L, words(1, 20)), (11L, words(200, 219))),
+      Seq((20L, words(200, 219)), (21L, words(300, 319))),
+      Seq((30L, words(300, 319)), (31L, words(400, 419))))
+    val full = fullKeepers(batches)
+    assert(full(20L) === 11L && full(30L) === 21L)
+    // the kill lands after the labels write (the index delta's directory is
+    // first created) or after the index write (the manifest is staged)
+    for (killAt <- Seq("index_v2", "_manifests")) {
+      val work = Files.createTempDirectory("graft-dedup-crash").toFile.getAbsolutePath
+      val in = landBatches(work, batches)
+      val state = s"crashfs://$work/state"
+      def dedup(i: Int): Unit = DocJob.run(spark, Array("dedup", in(i), state))
+      dedup(0); dedup(1)
+      val labels1 = labelMap(DedupStream.readLabels(spark, state))
+      val index1 = DedupStream.readIndex(spark, state).inputFiles.toSet
+      CrashFs.failOn = Some(s"$work/state/$killAt")
+      val crash = intercept[Exception](dedup(2))
+      assert(CrashFs.failOn.isEmpty, s"no crash injected at $killAt: $crash")
+      // batch 2's written deltas are invisible: the state is batch 1's
+      assert(labelMap(DedupStream.readLabels(spark, state)) === labels1, killAt)
+      assert(DedupStream.readIndex(spark, state).inputFiles.toSet === index1, killAt)
+      assert(DedupStream.nextBatchId(spark, state) === 2L, killAt)
+      dedup(2); dedup(3)
+      assert(labelMap(DedupStream.readLabels(spark, state)) === full, killAt)
+      assert(DedupStream.readIndex(spark, state).inputFiles
+        .exists(_.contains("/index_v2/")), killAt)
+      graft.ops.CacheLedger.release()
+    }
+  }
+
+  test("dedup state: a re-ingested doc keeps its old keeper") {
+    import graft.streaming.DedupStream
+    val work = Files.createTempDirectory("graft-dedup-reingest").toFile.getAbsolutePath
+    val state = s"$work/state"
+    // 5 ≡ 1 (keeper 1); batch 1 re-sends 5, batch 2 re-sends it again with
+    // a new doc 0 that moves the component's minimum
+    val batches = Seq(
+      Seq((1L, words(1, 20)), (5L, words(1, 20)), (7L, words(100, 119))),
+      Seq((5L, words(1, 20)), (9L, words(200, 219))),
+      Seq((5L, words(1, 20)), (0L, words(1, 20))))
+    val in = landBatches(work, batches)
+    in.indices.foreach { i =>
+      DocJob.run(spark, Array("dedup", in(i), state))
+      val seen = batches.take(i + 1)
+      assert(labelMap(DedupStream.readLabels(spark, state)) === fullKeepers(seen), s"batch $i")
+      // one row per doc in each delta: the re-sent id is not labelled twice
+      val delta = spark.read.parquet(s"$state/labels_v$i")
+      assert(delta.count() === delta.select("doc_id").distinct().count(), s"batch $i")
+    }
+    assert(labelMap(DedupStream.readLabels(spark, state))(5L) === 0L)
+    graft.ops.CacheLedger.release()
+  }
+}
+
+/** Local file system under the `crashfs` scheme that fails the first
+  * creation of a directory or file at or under [[CrashFs.failOn]] — a
+  * writer killed at that point of its output.
+  */
+class CrashFs extends org.apache.hadoop.fs.FilterFileSystem(new CrashFs.Local) {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+
+  private def maybeCrash(f: Path): Unit = CrashFs.synchronized {
+    CrashFs.failOn.filter(d => f.toUri.getPath.startsWith(d)).foreach { d =>
+      CrashFs.failOn = None
+      throw new java.io.IOException(s"injected crash creating $f (under $d)")
+    }
+  }
+
+  override def mkdirs(f: Path): Boolean = { maybeCrash(f); super.mkdirs(f) }
+
+  override def mkdirs(f: Path, p: FsPermission): Boolean = { maybeCrash(f); super.mkdirs(f, p) }
+
+  override def create(f: Path, p: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    maybeCrash(f)
+    super.create(f, p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CrashFs {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  @volatile var failOn: Option[String] = None
+
+  /** The raw local file system with `crashfs` paths. Its statuses drop the
+    * lazily loaded permissions, which the raw file system can only load
+    * for `file:` paths.
+    */
+  class Local extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+    private def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen,
+      s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+    override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+    override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
   }
 }
